@@ -493,12 +493,22 @@ def _apply_with_retry(base: str, apply_fn, retries: int = 0) -> int:
             time.sleep(min(0.05 * (2 ** (attempt - 1)), 1.0))
 
 
-# Per-file Bloom parameters: m bits packed into 64-bit words, k probes
-# via double hashing over the md5 of the value's canonical string form.
-# False-positive rate at m=1024, k=5 is < 1% up to ~100 values/file and
-# degrades gracefully — a false positive only costs reading one file.
-_BLOOM_M = 1024
+# Per-file Bloom parameters: k probes via double hashing over the md5
+# of the value's canonical string form, into m bits packed in 64-bit
+# words. m is sized PER FILE from its row count at 1024 bits per 100
+# values (10.24 bits/value: false-positive rate ≈ 0.86% at k=5 whatever
+# the file's size), rounded up to whole words and never below 16 words.
+# A false positive only costs reading one file. The probe reads m back
+# as 64·len(words), so a 16-word (m=1024) entry written before the
+# per-file sizing probes exactly as it always did.
+_BLOOM_BITS_PER_100 = 1024
+_BLOOM_MIN_WORDS = 16
 _BLOOM_K = 5
+
+
+def _bloom_n_words(n_rows: int) -> int:
+    """64-bit word count of a Bloom over a file of ``n_rows`` rows."""
+    return max(_BLOOM_MIN_WORDS, -(-n_rows * _BLOOM_BITS_PER_100 // (100 * 64)))
 
 
 def _bloom_canon(value) -> "str | None":
@@ -537,23 +547,29 @@ def _bloom_canon(value) -> "str | None":
     return str(value)
 
 
-def _bloom_hashes(canon: str) -> "list[int]":
-    """The k bit positions for a canonical value string."""
+def _bloom_hashes(canon: str, m: int) -> "list[int]":
+    """The k bit positions in an ``m``-bit filter for a canonical value
+    string."""
     import hashlib
 
     h = hashlib.md5(canon.encode()).digest()
     h1 = int.from_bytes(h[:8], "big")
     h2 = int.from_bytes(h[8:], "big") | 1
-    return [(h1 + i * h2) % _BLOOM_M for i in range(_BLOOM_K)]
+    return [(h1 + i * h2) % m for i in range(_BLOOM_K)]
 
 
-def _bloom_words(values) -> "list[int]":
-    words = [0] * (_BLOOM_M // 64)
+def _bloom_words(values, n_words: "int | None" = None) -> "list[int]":
+    """Bloom words over ``values``, ``n_words`` long — by default sized
+    from ``len(values)``, i.e. ``values`` holds a whole file's rows."""
+    if n_words is None:
+        n_words = _bloom_n_words(len(values))
+    words = [0] * n_words
+    m = 64 * n_words
     for v in values:
         canon = _bloom_canon(v)
         if canon is None:
             continue
-        for pos in _bloom_hashes(canon):
+        for pos in _bloom_hashes(canon, m):
             words[pos // 64] |= 1 << (pos % 64)
     return words
 
@@ -563,22 +579,35 @@ def _bloom_maybe_contains(words: "list[int]", value) -> bool:
     if canon is None:
         return True  # null/NaN probes are unindexed — keep the file
     return all(
-        words[pos // 64] >> (pos % 64) & 1 for pos in _bloom_hashes(canon)
+        words[pos // 64] >> (pos % 64) & 1
+        for pos in _bloom_hashes(canon, 64 * len(words))
     )
 
 
 def _bloom_words_spark(
-    spark: SparkSession, files: "list[str]", col: str
+    spark: SparkSession,
+    files: "list[str]",
+    col: str,
+    n_words_by_file: "dict[str, int]",
 ) -> "dict[str, list[int]]":
     """EXECUTOR-SIDE Bloom construction: one Spark job reads the listed
     parquet files' single column, hashes per Arrow batch (exact types —
     no pandas int→float widening), and emits per-(batch, file) partial
     word arrays that OR-merge on the driver (the OR of per-batch Blooms
-    IS the file's Bloom — bitwise OR is the only aggregation). The
-    driver handles O(partitions × files-in-commit) tiny rows, never
-    column data, so ``snapshot_create(bloom_cols=...)`` over a large
-    initial table scales with the cluster. Byte-equal with the
-    driver-side fallback by construction (unit-pinned)."""
+    IS the file's Bloom — bitwise OR is the only aggregation). Every
+    partial is sized from its FILE's row count (``n_words_by_file``,
+    keyed like ``files``), never from the batch's own value count, so
+    the partials of one file share one m; a file whose path does not
+    resolve in the map emits nothing and takes the caller's local
+    fallback. The driver handles O(partitions × files-in-commit) tiny
+    rows, never column data, so ``snapshot_create(bloom_cols=...)``
+    over a large initial table scales with the cluster. Byte-equal
+    with the driver-side fallback by construction (unit-pinned)."""
+
+    def _path(uri: str) -> str:
+        from urllib.parse import unquote, urlparse
+
+        return unquote(urlparse(uri).path)
 
     def build(batches):
         import pyarrow as pa
@@ -592,8 +621,11 @@ def _bloom_words_spark(
                 per_file.setdefault(f, []).append(v)
             out_f, out_w = [], []
             for f, vs in per_file.items():
+                n_words = n_words_by_file.get(_path(f))
+                if n_words is None:
+                    continue
                 out_f.append(f)
-                out_w.append(json.dumps(_bloom_words(vs)))
+                out_w.append(json.dumps(_bloom_words(vs, n_words)))
             yield pa.RecordBatch.from_pydict({"_f": out_f, "words": out_w})
 
     df = (
@@ -603,15 +635,19 @@ def _bloom_words_spark(
         )
         .mapInArrow(build, "_f string, words string")
     )
-    from urllib.parse import unquote, urlparse
-
     merged: dict[str, list[int]] = {}
     for r in df.collect():  # bounded: ≤ partitions × files-in-commit rows
-        path = unquote(urlparse(r["_f"]).path)
+        path = _path(r["_f"])
         words = json.loads(r["words"])
         cur = merged.get(path)
         if cur is None:
             merged[path] = words
+        elif len(cur) != len(words):
+            raise ValueError(
+                f"Bloom partials for {path} differ in size "
+                f"({len(cur)} vs {len(words)} words); OR-merging them "
+                "would drop bits"
+            )
         else:
             merged[path] = [a | b for a, b in zip(cur, words)]
     return merged
@@ -698,7 +734,10 @@ def _scan_files(
     ``stats_cols`` from the footers (pyarrow metadata only — no data
     pages touched). ``bloom_cols`` additionally builds a per-file
     Bloom filter over each listed column — the ONE write-side step
-    that reads data. With ``spark`` (every real commit path passes
+    that reads data — sized from the file's footer row count (1024
+    bits per 100 rows, ≥ 16 words; see ``_BLOOM_BITS_PER_100``), so
+    its false-positive rate stays ≈ 0.86% however large the file.
+    With ``spark`` (every real commit path passes
     it) the hashing runs EXECUTOR-SIDE via :func:`_bloom_words_spark`;
     the driver-side pyarrow loop survives only as the sparkless
     fallback and the byte-equality oracle for the unit test. Returns
@@ -768,7 +807,12 @@ def _scan_files(
                     **({"stats": stats} if stats else {}),
                 }
             )
-    rows_by_file = {e["_full"]: e["rows"] for e in entries}
+    n_words_by_file = {e["_full"]: _bloom_n_words(e["rows"]) for e in entries}
+
+    def local_words(full: str, col: str) -> "list[int]":
+        vals = pq.read_table(full, columns=[col])[col].to_pylist()
+        return _bloom_words(vals, n_words_by_file[full])
+
     for col in bloom_cols or []:
         with_col = [
             e["_full"] for e in entries if col in file_cols[e["_full"]]
@@ -776,25 +820,19 @@ def _scan_files(
         if not with_col:
             continue
         if spark is not None:
-            words_by_file = _bloom_words_spark(spark, with_col, col)
+            words_by_file = _bloom_words_spark(
+                spark, with_col, col, n_words_by_file
+            )
             for full in with_col:
-                if full in words_by_file:
-                    continue
-                # a zero-row file produces no Arrow batch: its Bloom is
-                # all-zeros (prunes every probe — correct for an empty
-                # file). A file with rows but no returned words means
-                # path normalization drifted — fall back to the local
-                # read for THAT file rather than mis-assign.
-                if rows_by_file[full] == 0:
-                    words_by_file[full] = [0] * (_BLOOM_M // 64)
-                else:
-                    vals = pq.read_table(full, columns=[col])[col].to_pylist()
-                    words_by_file[full] = _bloom_words(vals)
+                if full not in words_by_file:
+                    # a zero-row file produces no Arrow batch (its Bloom
+                    # is all-zeros: prunes every probe — correct for an
+                    # empty file); a file with rows but no returned
+                    # words means path normalization drifted — read
+                    # THAT file locally rather than mis-assign
+                    words_by_file[full] = local_words(full, col)
         else:
-            words_by_file = {}
-            for full in with_col:
-                vals = pq.read_table(full, columns=[col])[col].to_pylist()
-                words_by_file[full] = _bloom_words(vals)
+            words_by_file = {full: local_words(full, col) for full in with_col}
         for e in entries:
             words = words_by_file.get(e["_full"])
             if words is not None:
@@ -1962,9 +2000,12 @@ def snapshot_read(
       per-file Bloom filter (``bloom_cols`` at create time) possibly
       contains it — on a column the layout is NOT sorted by, min/max
       spans the domain in every file and the Bloom is what turns
-      "scan the table" into "read ~1 file" (false positives only cost
-      reading one extra file; the row-level equality filter keeps the
-      result exact). Files without a Bloom are conservatively kept.
+      "scan the table" into "read ~1 file": each file's Bloom is sized
+      from its row count (1024 bits per 100 rows), so a file that
+      lacks the value is kept with probability ≈ 0.86% at any file
+      size (false positives only cost reading one extra file; the
+      row-level equality filter keeps the result exact). Files
+      without a Bloom are conservatively kept.
     * tombstones (if any, and ``apply_tombstones``) are anti-joined on
       the table's id column — merge-on-read.
     """

@@ -16599,15 +16599,19 @@ def q289_snapshot_bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFr
     a column the physical layout is NOT sorted by, so every file's
     [min, max] spans roughly the whole part domain and zone-map stats
     cannot prune an equality probe. The manifest's Bloom turns "scan
-    every file" into "read the files that might contain the key"
-    (false positives cost one extra file each; the row-level equality
-    filter keeps the answer exact — pruning must never change a
-    result, same contract as q281/q286). At 100 TB this is the
-    secondary-index story for id-keyed erasure verification and
-    record-level audits: O(files-that-match) reads, zero directory
-    listings, no external index service. File-skipping effect is
-    unit-pinned (tests/test_manifest.py: <half the files read);
-    this oracle pins exactness on the probed key's rows."""
+    every file" into "read the files that might contain the key".
+    Each file's Bloom is sized from its row count (1024 bits per 100
+    rows: false-positive rate ≈ 0.86% at any file size; a fixed
+    1024-bit filter is all ones at sf0.01's ~3750 rows/file and
+    prunes nothing), so a probe reads the files holding the key plus
+    ≈ 0.86% of the rest (false positives cost one extra file each;
+    the row-level equality filter keeps the answer exact — pruning
+    must never change a result, same contract as q281/q286). At
+    100 TB this is the secondary-index story for id-keyed erasure
+    verification and record-level audits: O(files-that-match) reads,
+    zero directory listings, no external index service. File-skipping
+    effect is unit-pinned (tests/test_manifest.py: <half the files
+    read); this oracle pins exactness on the probed key's rows."""
     import shutil
 
     from .functions.manifest import snapshot_create, snapshot_read

@@ -523,6 +523,50 @@ class TestBloomPointLookup:
         got = snapshot_read(spark, base, point=("val", probe))
         assert [r["id"] for r in got.collect()] == [5500]
 
+    def test_false_positive_rate_holds_at_file_scale(self):
+        """Sized from the row count (1024 bits per 100 values, k=5), a
+        Bloom over 5000 distinct values keeps its ≈0.86% false-positive
+        rate (σ ≈ 0.065% over 20,000 probes; 1.2% is ~5σ out). A fixed
+        1024-bit filter at this size is all ones and admits everything."""
+        from ddf_flink_spark.functions.manifest import (
+            _bloom_maybe_contains,
+            _bloom_words,
+        )
+
+        words = _bloom_words(list(range(5000)))
+        absent = range(1_000_000, 1_020_000)
+        fp = sum(_bloom_maybe_contains(words, v) for v in absent)
+        assert fp <= 0.012 * len(absent), fp / len(absent)
+
+    def test_legacy_fixed_size_bloom_probes_as_before(self):
+        """A manifest entry written with the former fixed m=1024 (16
+        words) Bloom admits every value it was built from, and every
+        other probe gets the answer the fixed-size probe gave."""
+        import hashlib
+
+        from ddf_flink_spark.functions.manifest import (
+            _bloom_canon,
+            _bloom_maybe_contains,
+            _entry_admits,
+        )
+
+        def legacy_positions(v):
+            h = hashlib.md5(_bloom_canon(v).encode()).digest()
+            h1 = int.from_bytes(h[:8], "big")
+            h2 = int.from_bytes(h[8:], "big") | 1
+            return [(h1 + i * h2) % 1024 for i in range(5)]
+
+        values = [(i * 2654435761) % 100003 for i in range(80)]
+        words = [0] * 16
+        for v in values:
+            for pos in legacy_positions(v):
+                words[pos // 64] |= 1 << (pos % 64)
+        entry = {"commit": "c000000", "rows": 80, "bloom": {"val": words}}
+        assert all(_entry_admits(entry, "val", v) for v in values)
+        for v in range(5000):
+            legacy = all(words[p // 64] >> (p % 64) & 1 for p in legacy_positions(v))
+            assert _bloom_maybe_contains(words, v) == legacy, v
+
     def test_bloomless_files_conservatively_kept(self, spark, tmp_path):
         base = _mkbase(tmp_path, "m32")
         snapshot_create(spark.range(0, 100).withColumn("val", F.col("id") * 7), base)

@@ -679,9 +679,15 @@ def skew_confs(spark):
     """Temporarily lower AQE's skew thresholds so the test-sized corpus
     triggers the same skew-join machinery that production sizes trigger
     at the defaults (256 MB partitions) — the MECHANISM is what's under
-    test, the thresholds scale with the data."""
+    test, the thresholds scale with the data. The shuffle-partition
+    count is pinned too: the session default follows the host's cores,
+    and with a 20%-hot key over P partitions the hot partition is
+    ≈ 1 + P/4 times the median — exactly the factor 2 at P = 4, where
+    AQE (which splits only partitions strictly above factor × median)
+    cannot engage."""
     saved = {}
     overrides = {
+        "spark.sql.shuffle.partitions": "32",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "32k",
