@@ -558,19 +558,22 @@ def _bloom_hashes(canon: str, m: int) -> "list[int]":
     return [(h1 + i * h2) % m for i in range(_BLOOM_K)]
 
 
-def _bloom_words(values, n_words: "int | None" = None) -> "list[int]":
-    """Bloom words over ``values``, ``n_words`` long — by default sized
-    from ``len(values)``, i.e. ``values`` holds a whole file's rows."""
-    if n_words is None:
-        n_words = _bloom_n_words(len(values))
-    words = [0] * n_words
-    m = 64 * n_words
+def _bloom_add(words: "list[int]", values) -> None:
+    """Set ``values``' bits in ``words`` in place (m = 64·len(words))."""
+    m = 64 * len(words)
     for v in values:
         canon = _bloom_canon(v)
         if canon is None:
             continue
         for pos in _bloom_hashes(canon, m):
             words[pos // 64] |= 1 << (pos % 64)
+
+
+def _bloom_words(values) -> "list[int]":
+    """Bloom words over ``values``, one whole file's rows, sized from
+    ``len(values)``."""
+    words = [0] * _bloom_n_words(len(values))
+    _bloom_add(words, values)
     return words
 
 
@@ -591,18 +594,21 @@ def _bloom_words_spark(
     n_words_by_file: "dict[str, int]",
 ) -> "dict[str, list[int]]":
     """EXECUTOR-SIDE Bloom construction: one Spark job reads the listed
-    parquet files' single column, hashes per Arrow batch (exact types —
-    no pandas int→float widening), and emits per-(batch, file) partial
-    word arrays that OR-merge on the driver (the OR of per-batch Blooms
-    IS the file's Bloom — bitwise OR is the only aggregation). Every
-    partial is sized from its FILE's row count (``n_words_by_file``,
-    keyed like ``files``), never from the batch's own value count, so
-    the partials of one file share one m; a file whose path does not
-    resolve in the map emits nothing and takes the caller's local
-    fallback. The driver handles O(partitions × files-in-commit) tiny
-    rows, never column data, so ``snapshot_create(bloom_cols=...)``
-    over a large initial table scales with the cluster. Byte-equal
-    with the driver-side fallback by construction (unit-pinned)."""
+    parquet files' single column and hashes it per Arrow batch (exact
+    types — no pandas int→float widening) into ONE word array per
+    (task, file), ORed across all of the task's batches and emitted
+    after its last batch; the driver OR-merges those partials (the OR
+    of partial Blooms IS the file's Bloom — bitwise OR is the only
+    aggregation). A file not split across tasks therefore sends one
+    Bloom. Every partial is sized from its FILE's row count
+    (``n_words_by_file``, keyed like ``files``), never from the
+    values the task saw, so the partials of one file share one m; a
+    file whose path does not resolve in the map emits nothing and
+    takes the caller's local fallback. The driver receives about one
+    file-sized Bloom per file, never column data, so
+    ``snapshot_create(bloom_cols=...)`` over a large initial table
+    scales with the cluster. Byte-equal with the driver-side fallback
+    by construction (unit-pinned)."""
 
     def _path(uri: str) -> str:
         from urllib.parse import unquote, urlparse
@@ -612,21 +618,28 @@ def _bloom_words_spark(
     def build(batches):
         import pyarrow as pa
 
+        words_by_f: dict[str, list[int]] = {}
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            fnames = tbl.column("_f").to_pylist()
-            vals = tbl.column("_v").to_pylist()
+            fnames = batch.column("_f").to_pylist()
+            vals = batch.column("_v").to_pylist()
             per_file: dict[str, list] = {}
             for f, v in zip(fnames, vals):
                 per_file.setdefault(f, []).append(v)
-            out_f, out_w = [], []
             for f, vs in per_file.items():
-                n_words = n_words_by_file.get(_path(f))
-                if n_words is None:
-                    continue
-                out_f.append(f)
-                out_w.append(json.dumps(_bloom_words(vs, n_words)))
-            yield pa.RecordBatch.from_pydict({"_f": out_f, "words": out_w})
+                words = words_by_f.get(f)
+                if words is None:
+                    n_words = n_words_by_file.get(_path(f))
+                    if n_words is None:
+                        continue
+                    words = words_by_f[f] = [0] * n_words
+                _bloom_add(words, vs)
+        yield pa.RecordBatch.from_pydict(
+            {
+                "_f": list(words_by_f),
+                "words": [json.dumps(w) for w in words_by_f.values()],
+            },
+            schema=pa.schema([("_f", pa.string()), ("words", pa.string())]),
+        )
 
     df = (
         spark.read.parquet(*files)
@@ -636,7 +649,7 @@ def _bloom_words_spark(
         .mapInArrow(build, "_f string, words string")
     )
     merged: dict[str, list[int]] = {}
-    for r in df.collect():  # bounded: ≤ partitions × files-in-commit rows
+    for r in df.collect():  # ≈ one row per file (one per task it spans)
         path = _path(r["_f"])
         words = json.loads(r["words"])
         cur = merged.get(path)
@@ -810,8 +823,7 @@ def _scan_files(
     n_words_by_file = {e["_full"]: _bloom_n_words(e["rows"]) for e in entries}
 
     def local_words(full: str, col: str) -> "list[int]":
-        vals = pq.read_table(full, columns=[col])[col].to_pylist()
-        return _bloom_words(vals, n_words_by_file[full])
+        return _bloom_words(pq.read_table(full, columns=[col])[col].to_pylist())
 
     for col in bloom_cols or []:
         with_col = [

@@ -940,6 +940,49 @@ class TestBloomCanon:
         for e in via_spark:
             assert e["bloom"] == d[key(e)], e["path"]
 
+    def test_multi_batch_files_send_one_bloom_each(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A file of more rows than one Arrow batch is hashed into ONE
+        word array per task, not one file-sized partial per batch: the
+        driver collects one partial per file, byte-equal with the
+        driver-side Bloom."""
+        from ddf_flink_spark.functions.manifest import _scan_files
+
+        commit = str(tmp_path / "bloombatches")
+        spark.range(0, 4000).withColumn("val", F.col("id") * 7).repartition(
+            4
+        ).write.parquet(commit)
+        collected = []
+        df_cls = type(spark.range(0))  # the session's concrete DataFrame
+        orig_collect = df_cls.collect
+
+        def spy(df):
+            rows = orig_collect(df)
+            if df.columns == ["_f", "words"]:
+                collected.append(len(rows))
+            return rows
+
+        monkeypatch.setattr(df_cls, "collect", spy)
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "100")  # ~1000-row files: ~10 batches each
+        try:
+            via_spark, _ = _scan_files(
+                commit, None, [], bloom_cols=["val"], spark=spark
+            )
+        finally:
+            spark.conf.set(key, saved)
+        via_driver, _ = _scan_files(
+            commit, None, [], bloom_cols=["val"], spark=None
+        )
+        assert len(via_spark) == 4
+        assert all(e["rows"] > 100 for e in via_spark)
+        assert collected == [len(via_spark)]
+        d = {e["path"]: e["bloom"] for e in via_driver}
+        for e in via_spark:
+            assert e["bloom"] == d[e["path"]], e["path"]
+
 
 class TestChangesPruning:
     def test_one_id_delete_reads_one_admitting_file(self, spark, tmp_path):
