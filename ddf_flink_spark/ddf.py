@@ -168,6 +168,10 @@ class DDF:
         return self._derive(_views.sample_fraction(self._df, fraction, with_replacement, seed))
 
     def sample_n(self, n: int, with_replacement: bool = False, seed: int = 42) -> list:
+        """Exactly ``n`` random rows as a list of ``Row`` (all rows, shuffled,
+        when ``n`` >= the row count without replacement): takeSample's
+        sampling bound run in the JVM samplers, seeded by ``seed`` — see
+        operators/views.sample_exact."""
         return _views.sample_exact(self._df, n, with_replacement, seed)
 
     def sample_weighted(

@@ -27,6 +27,14 @@ operations every RETAINED corpus eventually runs (round-7 verdict's
   rename; on an object store the same shape rides the table format's
   atomic commit (e.g. a transactional catalog) — the plan is identical.
 
+The model sidecars (coarse centroids, codebooks) are a few KB and are
+read on the DRIVER with pyarrow at every load, not through Spark jobs:
+serving pays no job launch for a model that does not depend on the
+request, and a sidecar rewritten by a re-persist, rebalance or split is
+seen at the next load (no cache). Like the module's ``os.rename``
+partition swaps, this assumes ``base`` is on a filesystem the driver
+can read as a local path.
+
 The same tombstone-and-anti-join discipline applies unchanged to any
 id-keyed persisted corpus (the dedup fingerprint tables): the anti-join
 key is the id column, the compaction unit is whatever the table is
@@ -112,6 +120,23 @@ def persist_index(
             f.result()
 
 
+def _read_sidecar(path: str, keys: "list[str]") -> "dict[str, list]":
+    """A model sidecar's columns as Python lists, rows sorted by
+    ``keys``, read on the driver with pyarrow (no Spark job). A missing
+    or data-less directory reads as empty columns, so the caller's
+    'empty sidecar' check covers both."""
+    import pyarrow.parquet as pq
+
+    names = [*keys, "centroid"]
+    if not os.path.isdir(path):
+        return {c: [] for c in names}
+    t = pq.read_table(path)
+    if t.num_rows == 0:
+        return {c: [] for c in names}
+    t = t.sort_by([(k, "ascending") for k in keys])
+    return {c: t.column(c).to_pylist() for c in names}
+
+
 def load_index(
     spark: SparkSession, base: str, apply_tombstones: bool = True
 ) -> "tuple[DataFrame, list, list]":
@@ -125,29 +150,23 @@ def load_index(
         codes = codes.join(
             spark.read.parquet(f"{base}/tombstones"), "id", "left_anti"
         )
-    # the two sidecar collects are independent single-file reads →
-    # concurrent jobs (guide §2.6): one driver round-trip of latency
-    # instead of two, on every serve-leg reload
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_coarse = pool.submit(
-            lambda: spark.read.parquet(f"{base}/coarse").orderBy("list_id").collect()
+    # the model sidecars are a few KB (n_lists × dim doubles): read them
+    # on the driver, not through Spark jobs, on every serve-leg reload
+    coarse = _read_sidecar(f"{base}/coarse", ["list_id"])["centroid"]
+    cb = _read_sidecar(f"{base}/codebooks", ["j", "code"])
+    if not coarse:
+        raise ValueError(
+            f"load_index: empty coarse sidecar at {base}/coarse — "
+            "the index model was never persisted or was erased"
         )
-        f_cb = pool.submit(
-            lambda: spark.read.parquet(f"{base}/codebooks").orderBy("j", "code").collect()
-        )
-        coarse = [list(r["centroid"]) for r in f_coarse.result()]
-        cb_rows = f_cb.result()
-    if not cb_rows:
+    if not cb["j"]:
         raise ValueError(
             f"load_index: empty codebooks sidecar at {base}/codebooks — "
             "the index model was never persisted or was erased"
         )
-    m = 1 + max(r["j"] for r in cb_rows)
-    codebooks = [
-        [list(r["centroid"]) for r in cb_rows if r["j"] == j] for j in range(m)
-    ]
+    codebooks: list = [[] for _ in range(1 + max(cb["j"]))]
+    for j, centroid in zip(cb["j"], cb["centroid"]):
+        codebooks[j].append(centroid)
     return codes, coarse, codebooks
 
 
@@ -206,10 +225,7 @@ def load_chunk_index(
             "doc",
             "left_anti",
         )
-    coarse = [
-        list(r["centroid"])
-        for r in spark.read.parquet(f"{base}/coarse").orderBy("list_id").collect()
-    ]
+    coarse = _read_sidecar(f"{base}/coarse", ["list_id"])["centroid"]
     if not coarse:
         raise ValueError(
             f"load_chunk_index: empty coarse sidecar at {base}/coarse"

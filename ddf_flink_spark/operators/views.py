@@ -12,6 +12,10 @@ throws on grep/grep_ic) — Spark supports it natively via ``rlike``.
 
 from __future__ import annotations
 
+import math
+import random
+import sys
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -73,16 +77,53 @@ def sample_fraction(
     return df.sample(withReplacement=with_replacement, fraction=fraction, seed=seed)
 
 
-def sample_exact(
-    df: DataFrame, n: int, with_replacement: bool = False, seed: int = 42
-) -> list:
-    """Exact-size random sample collected to the client.
+def _sample_fraction_bound(n: int, total: int, with_replacement: bool) -> float:
+    """The sampling rate ``RDD.takeSample`` uses: a fraction q > n/total
+    whose sample has >= n rows 99.99% of the time. With replacement each
+    row is drawn Pois(q) times (q = p + 5·sqrt(p/total), 9 standard
+    deviations below n = 12); without, each row is kept with probability
+    q (Binomial tail bound, delta = 5e-5), capped at 1."""
+    p = n / total
+    if with_replacement:
+        return p + (9 if n < 12 else 5) * math.sqrt(p / total)
+    gamma = -math.log(0.00005) / total
+    return min(1.0, p + gamma + math.sqrt(gamma * gamma + 2 * gamma * p))
 
-    The reference hand-rolls Poisson/Binomial-bounded per-partition sampling
-    (``utils/package.scala:444-548``); Spark's ``RDD.takeSample`` implements
-    the same bounds, so delegate.
+
+def sample_exact(
+    df: DataFrame, n: int, with_replacement: bool = False, seed: int | None = 42
+) -> list:
+    """Exact-size random sample collected to the client
+    (``ViewHandler.scala:17-22``).
+
+    The reference hand-rolls Poisson/Binomial-bounded per-partition
+    sampling (``utils/package.scala:444-548``). This is ``RDD.takeSample``'s
+    algorithm run on the DataFrame, so rows stay in the JVM's Bernoulli
+    (without replacement) / Poisson (with replacement) samplers instead of
+    being pickled through a Python worker: one count, one
+    ``df.sample(fraction)`` collect at takeSample's fraction bound
+    (short by chance about once in 10^4 draws, then redrawn with a fresh
+    seed), then a seeded shuffle truncated to n. Without replacement and
+    n >= count the bound is 1, so every row comes back once, shuffled.
+    ``seed`` seeds both the JVM sampler and the shuffle: the same seed on
+    the same frame (same partitioning) returns the same rows in the same
+    order; ``None`` draws a fresh sample each call.
     """
-    return df.rdd.takeSample(with_replacement, n, seed)
+    if n < 0:
+        raise ValueError("Sample size cannot be negative.")
+    if n == 0:
+        return []
+    total = df.count()
+    if total == 0:
+        return []
+    want = n if with_replacement else min(n, total)
+    fraction = _sample_fraction_bound(n, total, with_replacement)
+    rand = random.Random(seed)
+    rows = df.sample(with_replacement, fraction, seed).collect()
+    while len(rows) < want:
+        rows = df.sample(with_replacement, fraction, rand.randint(0, sys.maxsize)).collect()
+    rand.shuffle(rows)
+    return rows[:want]
 
 
 def sample_fraction_deterministic(
@@ -111,7 +152,7 @@ def sample_exact_deterministic(
     Distributed as TakeOrderedAndProject (per-partition heap + driver
     merge of n candidates) — never a global sort. The reproducible
     variant of :func:`sample_exact` (which keeps Spark's takeSample
-    bounds as the engine-native path)."""
+    bounds and RNG as the engine-native path)."""
     from ..functions.dedup import md5_long
 
     key = md5_long(F.col(id_col).cast("string"), salt=seed)

@@ -2532,10 +2532,10 @@ def q65_sample_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject — bounded driver merge, no RNG state, better
     distributed shape than takeSample's collect). The hashed output pins
     size, realness (semi-join count) AND membership (key/price
-    checksums). The engine-native ``RDD.takeSample``
-    (Poisson/Binomial-bounded, ``utils/package.scala:444-548``) stays in
-    ``operators/views.sample_exact``, unit-tested; q161 demos the family
-    returning the full sampled rows."""
+    checksums). The engine-native seeded-RNG draw (takeSample's
+    Poisson/Binomial bounds, ``utils/package.scala:444-548``, run on the
+    DataFrame's JVM samplers) stays in ``operators/views.sample_exact``,
+    unit-tested; q161 demos the family returning the full sampled rows."""
     from .operators.views import sample_exact_deterministic
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -6816,8 +6816,9 @@ def q161_sample_exact_crossengine(spark: SparkSession, sf_dir: str) -> DataFrame
     """Deterministic exact-n sampling (operators/views.py
     sample_exact_deterministic): the 500 rows with the smallest
     ``md5_long(seed:id)`` — a uniform without-replacement draw that any
-    engine reproduces row-for-row (q65 keeps RDD.takeSample as the
-    engine-native path). Plan shape: TakeOrderedAndProject — bounded
+    engine reproduces row-for-row (``operators/views.sample_exact``
+    keeps the seeded-RNG takeSample-bounded draw as the engine-native
+    path). Plan shape: TakeOrderedAndProject — bounded
     driver merge, no global sort, no RNG state."""
     from .operators.views import sample_exact_deterministic
 

@@ -24,6 +24,14 @@ __all__ = ["get_spark", "DEFAULT_SHUFFLE_PARTITIONS"]
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _default_driver_mem() -> str:
+    """48g, capped at half of physical RAM: the local-mode driver JVM
+    also runs every executor task, and a heap sized past the host lets
+    it grow until the OS kills it. ``SPARK_GRAFT_DRIVER_MEM`` overrides."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(app_name: str = "ddf_flink_spark", **extra_conf: str) -> SparkSession:
     """Create (or reuse) a SparkSession with the engine's defaults.
 
@@ -42,7 +50,10 @@ def get_spark(app_name: str = "ddf_flink_spark", **extra_conf: str) -> SparkSess
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Periodic driver System.gc(): on a large-heap long-lived session

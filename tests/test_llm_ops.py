@@ -5,6 +5,8 @@ multimodal pandas-UDF plumbing."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2679,3 +2681,121 @@ def test_chunk_pq_build_is_partition_order_independent(spark, tmp_path):
     assert outs[0][1] == outs[1][1], "cell membership diverged"
     assert outs[0][2] == outs[1][2], "coarse centroids diverged"
     assert outs[0][3] == outs[1][3], "codebooks diverged"
+
+
+class TestSidecarReads:
+    """load_index / load_chunk_index read the model sidecars on the
+    driver: no Spark collect, and the same floats the Spark
+    ``orderBy().collect()`` read returns."""
+
+    @staticmethod
+    def _spark_read(spark, base):
+        import os
+
+        coarse = [
+            list(r["centroid"])
+            for r in spark.read.parquet(f"{base}/coarse").orderBy("list_id").collect()
+        ]
+        if not os.path.isdir(f"{base}/codebooks"):
+            return coarse, None
+        cb = spark.read.parquet(f"{base}/codebooks").orderBy("j", "code").collect()
+        m = 1 + max(r["j"] for r in cb)
+        return coarse, [
+            [list(r["centroid"]) for r in cb if r["j"] == j] for j in range(m)
+        ]
+
+    @pytest.fixture(scope="class")
+    def bases(self, spark, tmp_path_factory):
+        import random
+
+        from ddf_flink_spark.functions.index_store import persist_index
+        from ddf_flink_spark.functions.retrieval import (
+            build_chunk_index,
+            build_chunk_pq_index,
+        )
+        from ddf_flink_spark.functions.similarity import ivfadc_index_build
+
+        tmp = tmp_path_factory.mktemp("sidecars")
+        rng = random.Random(5)
+        vecs = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(60)]
+        df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
+        index, coarse, cents = ivfadc_index_build(df, n_lists=5, m=4, k=4, iters=2)
+        persist_index(index, coarse, cents, str(tmp / "ivf"))
+        vocab = [f"w{i}" for i in range(100)]
+        docs = [(i, " ".join(rng.choice(vocab) for _ in range(100))) for i in range(20)]
+        cdf = spark.createDataFrame(docs, "doc_id long, text string")
+        build_chunk_pq_index(cdf, str(tmp / "pq"), n_lists=3, m=4, k=4)
+        build_chunk_index(cdf, str(tmp / "chunk"), n_lists=3)
+        return {k: str(tmp / k) for k in ("ivf", "pq", "chunk")}
+
+    @pytest.fixture
+    def collects(self, spark, monkeypatch):
+        seen = []
+        df_cls = type(spark.range(0))
+        orig = df_cls.collect
+
+        def spy(df):
+            seen.append(df.columns)
+            return orig(df)
+
+        monkeypatch.setattr(df_cls, "collect", spy)
+        return seen
+
+    @pytest.mark.parametrize("kind", ["ivf", "pq"])
+    def test_load_index_matches_spark_read_and_collects_nothing(
+        self, spark, bases, kind, collects
+    ):
+        from ddf_flink_spark.functions.index_store import load_index
+
+        _, coarse, codebooks = load_index(spark, bases[kind])
+        assert collects == []
+        want_coarse, want_cb = self._spark_read(spark, bases[kind])
+        assert coarse == want_coarse and codebooks == want_cb
+        assert all(type(x) is float for c in coarse for x in c)
+
+    def test_load_chunk_index_matches_spark_read_and_collects_nothing(
+        self, spark, bases, collects
+    ):
+        from ddf_flink_spark.functions.index_store import load_chunk_index
+
+        _, coarse = load_chunk_index(spark, bases["chunk"])
+        assert collects == []
+        assert coarse == self._spark_read(spark, bases["chunk"])[0]
+
+    @pytest.mark.parametrize("sidecar", ["coarse", "codebooks"])
+    @pytest.mark.parametrize("how", ["missing", "empty"])
+    def test_load_index_missing_or_empty_sidecar(
+        self, spark, bases, tmp_path, sidecar, how
+    ):
+        import shutil
+
+        from ddf_flink_spark.functions.index_store import load_index
+
+        base = str(tmp_path / "idx")
+        shutil.copytree(bases["ivf"], base)
+        shutil.rmtree(f"{base}/{sidecar}")
+        if how == "empty":
+            schema = spark.read.parquet(f"{bases['ivf']}/{sidecar}").schema
+            spark.createDataFrame([], schema).write.parquet(f"{base}/{sidecar}")
+        msg = re.escape(f"empty {sidecar} sidecar at {base}/{sidecar}")
+        with pytest.raises(ValueError, match=msg):
+            load_index(spark, base)
+
+    @pytest.mark.parametrize("how", ["missing", "empty"])
+    def test_load_chunk_index_missing_or_empty_coarse(
+        self, spark, bases, tmp_path, how
+    ):
+        import shutil
+
+        from ddf_flink_spark.functions.index_store import load_chunk_index
+
+        base = str(tmp_path / "chunk")
+        shutil.copytree(bases["chunk"], base)
+        shutil.rmtree(f"{base}/coarse")
+        if how == "empty":
+            spark.createDataFrame([], "list_id int, centroid array<double>").write.parquet(
+                f"{base}/coarse"
+            )
+        msg = re.escape(f"empty coarse sidecar at {base}/coarse")
+        with pytest.raises(ValueError, match=msg):
+            load_chunk_index(spark, base)

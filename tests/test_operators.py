@@ -1142,3 +1142,77 @@ class TestValuesDf:
 
         with pytest.raises(ValueError, match="non-empty"):
             values_df(spark, [], "a int")
+
+
+class TestSampleExact:
+    """operators/views.sample_exact (behind DDF.sample_n): exact size,
+    real rows, seed-reproducible, and drawn in the JVM samplers — the
+    frame is never converted to a Python RDD."""
+
+    @pytest.fixture
+    def frame(self, spark, monkeypatch):
+        df = spark.range(0, 50, numPartitions=3).withColumn("v", F.col("id") * 3)
+
+        def no_rdd(self):
+            raise AssertionError("sample_exact must not touch DataFrame.rdd")
+
+        monkeypatch.setattr(type(df), "rdd", property(no_rdd))
+        return df
+
+    @staticmethod
+    def _real(rows):
+        return all(r["v"] == 3 * r["id"] and 0 <= r["id"] < 50 for r in rows)
+
+    @pytest.mark.parametrize("with_replacement", [False, True])
+    @pytest.mark.parametrize("n", [1, 7, 30])
+    def test_exactly_n_real_rows(self, frame, n, with_replacement):
+        from ddf_flink_spark.operators.views import sample_exact
+
+        rows = sample_exact(frame, n, with_replacement, seed=n)
+        assert len(rows) == n
+        assert self._real(rows)
+        if not with_replacement:
+            assert len({r["id"] for r in rows}) == n
+
+    def test_with_replacement_past_the_row_count(self, frame):
+        from ddf_flink_spark.operators.views import sample_exact
+
+        rows = sample_exact(frame, 120, with_replacement=True, seed=3)
+        assert len(rows) == 120 and self._real(rows)
+
+    @pytest.mark.parametrize("n", [50, 80])
+    def test_n_at_or_past_count_returns_every_row_once(self, frame, n):
+        from ddf_flink_spark.operators.views import sample_exact
+
+        rows = sample_exact(frame, n, seed=4)
+        assert sorted(r["id"] for r in rows) == list(range(50))
+
+    def test_zero_and_negative_n(self, frame):
+        from ddf_flink_spark.operators.views import sample_exact
+
+        assert sample_exact(frame, 0) == []
+        with pytest.raises(ValueError, match="negative"):
+            sample_exact(frame, -1)
+
+    def test_empty_frame(self, frame):
+        from ddf_flink_spark.operators.views import sample_exact
+
+        assert sample_exact(frame.filter("id < 0"), 5) == []
+        assert sample_exact(frame.filter("id < 0"), 5, with_replacement=True) == []
+
+    @pytest.mark.parametrize("with_replacement", [False, True])
+    def test_same_seed_same_rows(self, frame, with_replacement):
+        from ddf_flink_spark.operators.views import sample_exact
+
+        a = sample_exact(frame, 10, with_replacement, seed=11)
+        assert sample_exact(frame, 10, with_replacement, seed=11) == a
+
+    def test_ddf_sample_n(self, manager, frame):
+        from ddf_flink_spark import DDF
+
+        d = DDF(manager, frame)
+        rows = d.sample_n(12, seed=1)
+        assert len(rows) == 12 and len({r["id"] for r in rows}) == 12
+        assert self._real(rows)
+        assert d.sample_n(12, seed=1) == rows
+        assert len(d.sample_n(60, with_replacement=True, seed=2)) == 60
